@@ -2,100 +2,44 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pin the zone Verify validated under: q54/q56/q57 derive epoch
-      // micros from ntz columns, and a host-local zone would bench
-      // different (unverified) work
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r18 optimization: the generated-code cache (STATIC conf,
-      // default 100 entries) evicts long before pass 2 re-plans the
-      // same 294 queries, so every pass-2 stage re-ran Janino on an
-      // identical source. 4096 entries keeps both passes' classes
-      // resident — compiled-code reuse, never data reuse (results are
-      // recomputed from parquet every pass; guide §1 honesty note in
-      // OPTIMIZATION_r18.md).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // r19: dynamic partition pruning searches every join for a
-      // partitioned-scan side it could filter — this engine's tables
-      // are UNPARTITIONED parquet files (TESTDATA.md layout), so the
-      // rule can never fire (PlanPhases: 0 effective invocations
-      // board-wide) yet costs real optimizer time on join-dense plans
-      // (q227: 0.56–0.71 s per planning pass, measured). Off by
-      // default for this layout; flip the env for a deployment whose
-      // tables ARE hive-partitioned.
-      .config("spark.sql.optimizer.dynamicPartitionPruning.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_DPP", "false"))
-    // Optional extra confs for LOCAL A/B experiments only
-    // ("k=v;k2=v2"): the driver never sets this env, so its bench
-    // always runs the default session shape above.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kvs =>
-      kvs.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    }
-    val spark = builder
-      // same session shape as Verify: q205 requires the injected
-      // RangeJoinRewrite rule, and benching must time the verified plan
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm-up outside the timed region: first-touch costs (codegen JIT,
-    // parquet footer reads, FileSourceScan setup) otherwise land on
-    // whichever query the map iterates first.
-    Tables.all.foreach { n =>
-      try Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () }
-    }
+    val sfDir = GraftSession.sfDir
+    val spark = GraftSession.create()
+    GraftSession.warmUp(spark, sfDir)
     // Optional comma-separated allowlist for iterating on single queries
     // locally; the driver leaves it unset and benches everything.
     val only = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
-    // Host-load markers (r12 verdict ask #3): identical-code sweeps have
-    // ranged 191→240 s under host steal from OUTSIDE the guest; the
-    // before/after loadavg in the sidecar lets the judge separate steal
-    // from regressions without re-deriving common-subset sums.
-    def loadavg(): String =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
-      catch { case _: Throwable => "" }
-    val loadBefore = loadavg()
+    // Host-load markers: the before/after loadavg in the sidecar
+    // separates host steal from regressions.
+    val loadBefore = GraftSession.loadavg()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     // Steal-immune sidecar columns (r13 verdict ask #1): wall time is
     // the only number host steal can corrupt, so every query also
     // records executor CPU-ns and shuffle read/write bytes from a
-    // task-end listener. The bus is drained before each snapshot so
-    // the deltas are exact per-query cuts (async listener delivery
-    // would otherwise smear a query's tail into its successor).
-    val taskMetrics = org.apache.spark.graftmetrics.GraftTaskMetrics
-      .install(spark.sparkContext)
-    def metricsCut(): (Long, Long, Long) = {
-      org.apache.spark.graftmetrics.GraftTaskMetrics.flush(spark.sparkContext)
-      taskMetrics.snapshot()
+    // task-end listener.
+    val metricsCut = GraftSession.metricsCut(spark)
+    // Measurement record: wall secs, the failure (`<class>: <message>`)
+    // if the query threw, CPU secs, shuffle read/write bytes. The noop
+    // sink — not count() — is what makes the timing honest: under
+    // count() Catalyst prunes every unused projection, so a
+    // pure-projection query (token counts, quality scores, PII scrub,
+    // ...) would time the parquet scan alone and report near-zero
+    // regardless of the operator's real cost. noop evaluates every
+    // output column and discards the rows — the standard Spark
+    // benching sink.
+    final case class Sample(wall: Double, error: Option[String], cpu: Double,
+        shufRead: Long, shufWrite: Long) {
+      def ok: Boolean = error.isEmpty
     }
-    // Measurement record: wall secs, completed-without-throwing, CPU
-    // secs, shuffle read/write bytes. The noop sink — not count() — is
-    // what makes the timing honest: under count() Catalyst prunes
-    // every unused projection, so a pure-projection query (token
-    // counts, quality scores, PII scrub, ...) would time the parquet
-    // scan alone and report near-zero regardless of the operator's
-    // real cost. noop evaluates every output column and discards the
-    // rows — the standard Spark benching sink.
-    final case class Sample(wall: Double, ok: Boolean, cpu: Double,
-        shufRead: Long, shufWrite: Long)
     def time(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
       val (c0, r0, w0) = metricsCut()
       val t0 = System.nanoTime()
-      val ok = try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
-      } catch { case _: Throwable => false }
+      val error = try {
+        fn(spark, sfDir).write.mode("overwrite").format("noop").save(); None
+      } catch { case e: Throwable => Some(e.toString) }
       val wall = (System.nanoTime() - t0) / 1e9
       val (c1, r1, w1) = metricsCut()
-      Sample(wall, ok, (c1 - c0) / 1e9, r1 - r0, w1 - w0)
+      Sample(wall, error, (c1 - c0) / 1e9, r1 - r0, w1 - w0)
     }
     val firstPass = selected.map { case (name, fn) => (name, fn, time(fn)) }
     // A single stop-the-world pause (GC, JIT deopt storm, host
@@ -132,8 +76,8 @@ object Bench {
       // samples take the faster, and the reported CPU/shuffle numbers
       // belong to the SAME pass as the reported wall, so the columns
       // describe one execution, not a min-mixture. The per-query `ok`
-      // flag lands in the metrics JSON so a throw is visible to the
-      // judge instead of masquerading as a timing.
+      // flag (plus the reported pass's `error`) lands in the metrics
+      // JSON so a throw is visible instead of masquerading as a timing.
       val best =
         if (s1.ok != s2.ok) { if (s1.ok) s1 else s2 }
         else if (s2.wall < s1.wall) s2 else s1
@@ -143,11 +87,12 @@ object Bench {
       .mkString("{", ",", "}")
     val metricsJson = results.map { case (k, v) =>
       s"\"" + k + "\":" + s"""{"wall":${v.wall},"ok":${v.ok},"cpu":${v.cpu},""" +
-        s""""shuffle_read":${v.shufRead},"shuffle_write":${v.shufWrite}}"""
+        s""""shuffle_read":${v.shufRead},"shuffle_write":${v.shufWrite}""" +
+        v.error.fold("")(e => s""","error":${Verify.jsonString(e)}""") + "}"
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2.wall).sum else 0.0
     val cpuTotal = if (results.nonEmpty) results.map(_._2.cpu).sum else 0.0
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":$cpuTotal,"queries":$qs,"metrics":$metricsJson,"sf":"$sfDir","loadavg_before":"$loadBefore","loadavg_after":"${loadavg()}"}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","cpu_total":$cpuTotal,"queries":$qs,"metrics":$metricsJson,"sf":"$sfDir","loadavg_before":"$loadBefore","loadavg_after":"${GraftSession.loadavg()}"}"""
     val shortJson = s"""{"metric":"total","value":$total,"unit":"sec"}"""
     // ONLY the short line goes to stdout. r11 forensics: the driver's
     // capture window is a few KB, and the ~7 KB per-query line pushed

@@ -143,21 +143,22 @@ object Components {
   private def incrementalParts(prior: DataFrame, newEdges: DataFrame,
       srcCol: String, dstCol: String,
       maxRounds: Int): (DataFrame, DataFrame) = {
-    // the canonical delta is consumed TWICE (touched-node probe + star
-    // rounds); cut its lineage eagerly so an expensive upstream
-    // candidate generator (e.g. tiled all-pairs cosine) runs once, not
-    // per consumer — the connectedComponents checkpoint discipline,
-    // and the frame is delta-sized, never graph-sized
+    // the canonical delta feeds the touched-node probe AND the star
+    // rounds, so its lineage is cut once (the frame is delta-sized,
+    // never graph-sized). The mark is LAZY: the first job that reads it
+    // — the first count inside connectedComponents below — materializes
+    // the blocks, and every later job reads them, one job fewer than
+    // eager. That first job reads the delta from two union arms
+    // (touched stars via the touched-node probe, and the delta edges);
+    // arms that run before the blocks land can each compute the
+    // delta's upstream — the race that keeps multi-arm first consumers
+    // elsewhere in this codebase eager.
     val delta = newEdges
       .filter(col(srcCol).isNotNull && col(dstCol).isNotNull &&
         col(srcCol) =!= col(dstCol))
       .select(greatest(col(srcCol), col(dstCol)).as("u"),
         least(col(srcCol), col(dstCol)).as("v"))
       .distinct()
-      // lazy (r19): the first consumer's job materializes the blocks
-      // and later consumers read them — same sharing, one less
-      // standalone driver job than eager (the connectedComponents
-      // count-fusion note)
       .localCheckpoint(false)
     val touchedNodes = delta.select(col("u").as("node"))
       .unionAll(delta.select(col("v").as("node"))).distinct()

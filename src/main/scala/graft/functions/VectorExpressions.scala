@@ -612,7 +612,10 @@ object VectorExpressions {
     * (same commons-codec digest definition; VectorExpressionsSpec
     * pins array-for-array equality against the HOF chain), so every
     * count- and span-valued oracle that replays md5 strings in
-    * DuckDB is unaffected.
+    * DuckDB is unaffected. Null contract, also concat_ws's: a null
+    * token is skipped (its window hashes the remaining tokens, one
+    * space apart) but still occupies its position; a null array is
+    * null.
     */
   case class PositionalNgramMd5(child: Expression, n: Int)
       extends UnaryExpression with CodegenFallback {
@@ -630,10 +633,14 @@ object VectorExpressions {
       var i = 0
       while (i < windows) {
         md.reset()
+        var first = true
         var w = 0
         while (w < n) {
-          if (w > 0) md.update(' '.toByte)
-          md.update(toks.getUTF8String(i + w).getBytes)
+          if (!toks.isNullAt(i + w)) {
+            if (!first) md.update(' '.toByte)
+            md.update(toks.getUTF8String(i + w).getBytes)
+            first = false
+          }
           w += 1
         }
         out(i) = InternalRow(i + 1, md.digest())

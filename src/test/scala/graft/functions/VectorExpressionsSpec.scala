@@ -167,6 +167,27 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(withCodegen === (("é Ｄx", "é Dx")))
   }
 
+  /** positionalNgramMd5 over `_t` equals the HOF chain it replaced —
+    * sequence → transform(struct(pos, unhex(md5(concat_ws(slice))))) —
+    * array for array, at every n in `ns`.
+    */
+  private def assertFusedEqualsHof(docs: org.apache.spark.sql.DataFrame,
+      ns: Seq[Int]): Unit =
+    for (n <- ns) {
+      val fused = docs.select(col("id"),
+        VectorExpressions.positionalNgramMd5(col("_t"), n).as("o"))
+      val starts = when(size(col("_t")) >= n,
+        sequence(lit(1), size(col("_t")) - (n - 1)))
+        .otherwise(array().cast("array<int>"))
+      val hof = docs.select(col("id"),
+        when(col("_t").isNotNull, transform(starts, i => struct(i.as("pos"),
+          unhex(md5(concat_ws(" ", slice(col("_t"), i, lit(n))))).as("g")))).as("o"))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+        r.getLong(0) -> Option(r.getSeq[org.apache.spark.sql.Row](1))
+          .map(_.map(x => (x.getInt(0), x.getAs[Array[Byte]](1).toSeq)))).toMap
+      assert(rows(fused) == rows(hof), s"n=$n")
+    }
+
   test("positionalNgramMd5: fused positions+digests equal the HOF chain") {
     val rnd = new scala.util.Random(11)
     val words = Vector("alpha", "beta", "gamma", "\u00e9l\u00e8ve", "x", "longer-token",
@@ -175,20 +196,17 @@ class VectorExpressionsSpec extends SparkSpec {
       // lengths 0..11 straddle every n: size < n must emit NO windows
       (i.toLong, Array.fill(rnd.nextInt(12))(words(rnd.nextInt(words.size))))
     }.toDF("id", "_t")
-    for (n <- Seq(1, 3, 5)) {
-      val fused = docs.select(col("id"),
-        VectorExpressions.positionalNgramMd5(col("_t"), n).as("o"))
-      val starts = when(size(col("_t")) >= n,
-        sequence(lit(1), size(col("_t")) - (n - 1)))
-        .otherwise(array().cast("array<int>"))
-      val hof = docs.select(col("id"),
-        transform(starts, i => struct(i.as("pos"),
-          unhex(md5(concat_ws(" ", slice(col("_t"), i, lit(n))))).as("g"))).as("o"))
-      val f = fused.collect().map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
-        .map(x => (x.getInt(0), x.getAs[Array[Byte]](1).toSeq))).toMap
-      val h = hof.collect().map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
-        .map(x => (x.getInt(0), x.getAs[Array[Byte]](1).toSeq))).toMap
-      assert(f == h, s"n=$n")
-    }
+    assertFusedEqualsHof(docs, Seq(1, 3, 5))
+  }
+
+  test("positionalNgramMd5: null tokens are skipped like concat_ws, positions kept") {
+    val docs = Seq[(Long, Seq[String])](
+      (0L, Seq(null)),
+      (1L, Seq("a", null, "b", "c")),
+      (2L, Seq(null, null, "x", null)), // all-null windows hash ""
+      (3L, Seq("p", "q", null)),
+      (4L, null)) // a null array stays null
+      .toDF("id", "_t")
+    assertFusedEqualsHof(docs, Seq(1, 2, 3))
   }
 }
